@@ -325,6 +325,33 @@ def test_publish_bak_restored_after_crash_window(fba_runner, tmp_path):
     assert os.path.exists(path)
 
 
+def test_bak_restored_over_empty_store_dir(fba_runner, tmp_path, monkeypatch):
+    """An EMPTY store dir next to a .bak (a crash after the new dir was
+    created but before any file landed) must not swallow the restore.
+    On HDFS a rename onto an existing directory moves the source INTO
+    it, nesting the backup; the local filesystem replaces an empty
+    directory instead, so HDFS's rename is emulated here."""
+    import shutil
+
+    from xyzpy_spark import fsutil
+
+    def hdfs_rename(spark, src, dst):
+        if os.path.isdir(dst):
+            dst = os.path.join(dst, os.path.basename(src))
+        os.rename(src, dst)
+
+    path = str(tmp_path / "empty_store.parquet")
+    h = fba_runner.harvester(path)
+    h.harvest_combos({"a": [1, 2], "b": [10]})
+    shutil.move(path, path + ".bak")
+    os.mkdir(path)
+    monkeypatch.setattr(fsutil, "rename", hdfs_rename)
+    df = h.load_full_df()
+    assert sorted(r["a"] for r in df.select("a").distinct().collect()) == [1, 2]
+    assert any(f.endswith(".parquet") for f in os.listdir(path))
+    assert not os.path.exists(path + ".bak")
+
+
 def test_to_xarray_attrs_roundtrip(spark, tmp_path, monkeypatch):
     """Runner constants + attrs written to the _attrs.json sidecar on
     harvest must surface as Dataset.attrs in Harvester.to_xarray

@@ -201,3 +201,51 @@ def test_fs_handle_cache_per_scheme(spark, myfs):
     assert fsutil._fs_cache_key("file:/x") == ("file", "")
     cache = spark._xyzpy_fs_cache
     assert ("viewfs", "test") in cache and ("", "") in cache
+
+
+def test_fs_cache_key_gives_every_scheme_its_own_slot():
+    """Any RFC 3986 ``scheme:`` prefix keys its own FileSystem slot —
+    a single-slash ``hdfs:/x`` must not share the default-FS slot that
+    ``/x`` and ``x`` resolve through."""
+    key = fsutil._fs_cache_key
+    assert key("file:/x") == ("file", "")
+    assert key("hdfs:/x") == ("hdfs", "")
+    assert key("s3a:/x") == ("s3a", "")
+    assert key("s3a://b/x") == ("s3a", "b")
+    assert key("/x") == ("", "")
+    assert key("x") == ("", "")
+
+
+def test_read_text_or_none_matches_exception_class_not_text(
+    spark, tmp_path, monkeypatch
+):
+    """Only a java.io.FileNotFoundException (itself or along the cause
+    chain) reads as a missing file; an IO failure whose message merely
+    mentions one must raise."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+
+    class _StubFS:
+        def __init__(self, jexc):
+            self.jexc = jexc
+
+        def open(self, p):
+            raise Py4JJavaError("An error occurred calling open", self.jexc)
+
+    def stub_open_raising(jexc):
+        monkeypatch.setattr(
+            fsutil, "hadoop_fs", lambda s, path: (_StubFS(jexc), None)
+        )
+
+    stub_open_raising(jvm.java.io.IOException(
+        "lease recovery failed: java.io.FileNotFoundException: /s/_layout.json"
+    ))
+    with pytest.raises(Py4JJavaError):
+        fsutil.read_text_or_none(spark, "/s/_layout.json")
+    stub_open_raising(jvm.java.io.IOException(
+        "wrapped", jvm.java.io.FileNotFoundException("/s/_layout.json")
+    ))
+    assert fsutil.read_text_or_none(spark, "/s/_layout.json") is None
+    monkeypatch.undo()
+    assert fsutil.read_text_or_none(spark, str(tmp_path / "absent.json")) is None

@@ -41,7 +41,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import fsutil
 from .grid import LOC_COL, case_grid, combo_grid, grid_size
 from .prepare import parse_cases, parse_combos, parse_constants
-from .runner import VarSpec, evaluate_grid, resolve_var_specs
+from .runner import (
+    VarSpec,
+    _result_schema,
+    _union_dims,
+    evaluate_grid,
+    resolve_var_specs,
+)
 from .utils import OverlapPool, local_df
 
 
@@ -348,17 +354,11 @@ class Crop:
         """Row-count audit of grown batches vs expected grid sizes
         (reference ``check_bad``, ``cropping.py:1151-1199``); returns
         (and optionally deletes, for re-grow) mismatching batches."""
-        var_specs, _ = self._load_specs()
-        spec = self._load_spec()
+        var_specs, coords = self._load_specs()
         inner = 1
-        if spec["explode"]:
-            seen: list[str] = []
-            for s in var_specs:
-                for d in s.dims:
-                    if d not in seen:
-                        seen.append(d)
-            for d in seen:
-                inner *= len(spec["coords"][d])
+        if self._load_spec()["explode"]:
+            for d in _union_dims(s.dims for s in var_specs):
+                inner *= len(coords[d])
         expected = {
             b: sz * inner for b, sz in self.expected_batch_sizes().items()
         }
@@ -439,31 +439,10 @@ class Crop:
             # zero batches grown: an empty results frame with the
             # schema evaluate_grid would produce, so the null-fill
             # join below yields the documented all-null grid
-            from pyspark.sql import types as T
-
-            from ._types import spark_type_of_scalar
-
-            spec = self._load_spec()
             var_specs, coords = self._load_specs()
-            fields = [T.StructField(LOC_COL, T.LongType())]
-            if spec["explode"]:
-                union_dims: list[str] = []
-                for s in var_specs:
-                    for d in s.dims:
-                        if d not in union_dims:
-                            union_dims.append(d)
-                for d in union_dims:
-                    fields.append(
-                        T.StructField(
-                            d, spark_type_of_scalar(coords[d][0])
-                        )
-                    )
-                for s in var_specs:
-                    fields.append(T.StructField(s.name, s.scalar_type))
-            else:
-                for s in var_specs:
-                    fields.append(T.StructField(s.name, s.column_type))
-            results = local_df(self.spark, [], T.StructType(fields))
+            results = local_df(self.spark, [], _result_schema(
+                var_specs, coords, explode=self._load_spec()["explode"],
+            ))
         if missing:
             grid = self.spark.read.parquet(self.grid_path)
             param_cols = [

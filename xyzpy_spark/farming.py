@@ -26,14 +26,15 @@ from __future__ import annotations
 import functools
 import json
 import uuid
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import fsutil
-from .grid import LOC_COL
+from .grid import LOC_COL, _seeded_shuffle
 from .merge import merge_datasets
-from .missing import non_null_points
+from .missing import _present_points
 from .prepare import (
     parse_cases,
     parse_combos,
@@ -41,11 +42,12 @@ from .prepare import (
     parse_fn_args,
     parse_var_names,
 )
-from .runner import combo_runner_to_df
-
-# internal "not passed" marker: None is a meaningful value (no store
-# on disk) for the metadata threaded through one top-up (r14)
-_UNSET = object()
+from .runner import (
+    _union_dims,
+    combo_runner_to_df,
+    evaluate_grid,
+    resolve_var_specs,
+)
 
 
 class Runner:
@@ -132,41 +134,36 @@ class Runner:
         The scale path for incremental top-ups: the missing-point set
         stays distributed end to end (no driver collect).  ``grid_df``
         columns are the parameter dims; a job-local ``_loc`` key is
-        attached for result pairing.  Accepts the same execution
+        attached for result pairing unless the grid carries one (as
+        ``grid.combo_grid`` builds it).  Accepts the same execution
         kwargs as ``run_combos`` (``num_partitions``/``shuffle``/
         ``keep_loc``) so a kwarg that worked on the first harvest
         does not crash the missing-only top-up.
 
-        ``sample_point`` — one grid row as a dict, used only to
+        ``sample_point`` — one grid point as a dict, used only to
         resolve var specs (the kernel's output schema).  Callers that
-        already probed the grid (the harvest emptiness check) pass it
-        to skip this method's own ``limit(1)`` sample job (r14: one
-        fewer driver job per missing-only top-up).
+        already know a point (the harvest emptiness probe, or the
+        first combo point) pass it to skip this method's own
+        ``limit(1)`` sample job.
         """
-        from pyspark.sql import functions as F
-
-        from .runner import evaluate_grid, resolve_var_specs
-
         merged_consts = {**self.constants, **parse_constants(constants)}
         if sample_point is None:
             first = grid_df.limit(1).collect()
             if not first:
                 raise ValueError("empty grid")
             sample_point = first[0].asDict()
-        cases = (sample_point,)
+        cases = ({k: v for k, v in sample_point.items() if k != LOC_COL},)
         specs, coords = resolve_var_specs(
             self.fn, (), cases, merged_consts, self.resources,
             self.var_names, self.var_dims, self.var_coords, self.var_types,
         )
-        grid = grid_df.withColumn(LOC_COL, F.monotonically_increasing_id())
-        if shuffle:
-            seed = 42 if shuffle is True else int(shuffle)
-            n = num_partitions or grid.sparkSession.sparkContext.defaultParallelism
-            grid = grid.repartition(
-                n, F.xxhash64(F.col(LOC_COL), F.lit(seed))
+        if LOC_COL not in grid_df.columns:
+            grid_df = grid_df.withColumn(
+                LOC_COL, F.monotonically_increasing_id()
             )
-        elif num_partitions:
-            grid = grid.repartition(num_partitions)
+        grid = _seeded_shuffle(grid_df, shuffle, num_partitions)
+        if grid is grid_df and num_partitions:  # no shuffle asked
+            grid = grid_df.repartition(num_partitions)
         out = evaluate_grid(
             grid, self.fn, specs, coords,
             constants=merged_consts, resources=self.resources,
@@ -234,7 +231,7 @@ def _normalize_partition_by(partition_by) -> tuple[str, ...] | None:
     return pby
 
 
-def _write_layout(spark, dirpath: str, partition_by, schema) -> None:
+def _write_layout(spark, dirpath: str, partition_by, schema) -> dict:
     """Persist the store's physical layout next to the data: the
     partition dim and the UNIFIED logical schema.  The schema sidecar
     is what lets a partitioned store read as one table at 100 TB —
@@ -243,22 +240,16 @@ def _write_layout(spark, dirpath: str, partition_by, schema) -> None:
     sidecar the read is ``spark.read.schema(...)`` and files that
     predate a column simply surface NULLs (exactly the outer-merge
     hole semantics).  Underscore-prefixed so partition discovery
-    ignores it (the ``_attrs.json`` convention)."""
-    pby = _normalize_partition_by(partition_by)
+    ignores it (the ``_attrs.json`` convention).  Returns the layout
+    as written."""
+    layout = {
+        "partition_by": list(_normalize_partition_by(partition_by)),
+        "schema": schema.jsonValue(),
+    }
     fsutil.write_text(
-        spark,
-        fsutil.join(dirpath, "_layout.json"),
-        json.dumps(
-            {"partition_by": list(pby), "schema": schema.jsonValue()}
-        ),
+        spark, fsutil.join(dirpath, "_layout.json"), json.dumps(layout)
     )
-
-
-def _read_layout(spark, path: str) -> dict | None:
-    txt = fsutil.read_text_or_none(
-        spark, fsutil.join(path, "_layout.json")
-    )
-    return None if txt is None else json.loads(txt)
+    return layout
 
 
 def _publish_parquet(
@@ -266,20 +257,22 @@ def _publish_parquet(
     path: str,
     attrs: dict | None = None,
     partition_by=None,
-) -> None:
+) -> dict | None:
     """Write-audit-publish: stage to a temp dir, audit, swap with .bak.
 
     ``partition_by`` stages the store in the PARTITIONED layout
     (``dim=value`` dirs + ``_layout.json`` schema sidecar) — the full
     atomic swap is still used here (first write / schema surgery);
     incremental top-ups go through ``Harvester._publish_partitions``
-    which rewrites only touched partitions."""
+    which rewrites only touched partitions.  Returns the layout
+    sidecar as written (``None`` for the unpartitioned layout)."""
     spark = df.sparkSession
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     partition_by = _normalize_partition_by(partition_by)
+    layout = None
     if partition_by is not None:
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-        _write_layout(spark, tmp, partition_by, df.schema)
+        layout = _write_layout(spark, tmp, partition_by, df.schema)
     else:
         df.write.mode("overwrite").parquet(tmp)
     if attrs:
@@ -306,6 +299,7 @@ def _publish_parquet(
         raise
     finally:
         fsutil.delete(spark, tmp)
+    return layout
 
 
 def load_attrs(path: str, spark: SparkSession | None = None) -> dict:
@@ -322,6 +316,16 @@ def load_attrs(path: str, spark: SparkSession | None = None) -> dict:
             )
     txt = fsutil.read_text_or_none(spark, fsutil.join(path, "_attrs.json"))
     return {} if txt is None else json.loads(txt)
+
+
+class _Snapshot(NamedTuple):
+    """One read of a Harvester store: the data view (``None`` when no
+    store exists), the layout sidecar, and the directory listing,
+    which says which other sidecars exist."""
+
+    df: DataFrame | None
+    layout: dict | None
+    children: list[str]
 
 
 class Harvester:
@@ -367,33 +371,28 @@ class Harvester:
         return self.load_full_df()
 
     def load_full_df(self) -> DataFrame | None:
-        return self._load_store()[0]
+        return self._load_store().df
 
-    def _load_store(
-        self,
-    ) -> tuple[DataFrame | None, dict | None, list[str]]:
-        """(full store DataFrame, layout sidecar, child names) in the
-        minimum driver metadata round trips (r14, guide §5): ONE
+    def _read_meta(self) -> tuple[dict | None, list[str]]:
+        """The store's (layout sidecar, child names) — the one reader
+        of its metadata, in the minimum driver round trips: ONE
         ``listStatus`` answers both "does the store exist" and "which
         sidecars are present", so only sidecars that exist are then
         opened — no exists-probe per sidecar, no exception round trip
-        for missing ones.  Callers that need the layout or the attrs
-        (``add_df``) stop re-reading them; the public
-        ``load_full_df`` keeps its contract.  An empty child list
-        means no store: every publish path materializes files
-        (parquet part files + _SUCCESS) before the store path
-        appears."""
+        for missing ones.  An empty child list means no store: every
+        publish path materializes files (parquet part files +
+        _SUCCESS) before the store path appears."""
         children = fsutil.listdir(self.spark, self.data_name)
-        if not children:
-            bak = self.data_name + ".bak"
-            if fsutil.exists(self.spark, bak):
-                # a crash between _publish_parquet's two renames leaves
-                # only the .bak — restore it instead of silently
-                # starting an empty store
-                fsutil.rename(self.spark, bak, self.data_name)
-                children = fsutil.listdir(self.spark, self.data_name)
-            if not children:
-                return None, None, []
+        bak = self.data_name + ".bak"
+        if not children and fsutil.exists(self.spark, bak):
+            # a crash between _publish_parquet's two renames leaves
+            # only the .bak — restore it instead of silently starting
+            # an empty store.  An empty store dir goes first: a rename
+            # onto an existing directory moves the source INTO it on
+            # HDFS, nesting the backup (non-recursive: never data)
+            fsutil.delete(self.spark, self.data_name, recursive=False)
+            fsutil.rename(self.spark, bak, self.data_name)
+            children = fsutil.listdir(self.spark, self.data_name)
         layout = None
         if "_layout.json" in children:
             layout = json.loads(
@@ -402,7 +401,23 @@ class Harvester:
                     fsutil.join(self.data_name, "_layout.json"),
                 )
             )
-        return self._store_reader(layout), layout, children
+        return layout, children
+
+    def _load_store(self) -> _Snapshot:
+        """One snapshot of the store (see :class:`_Snapshot`): every
+        operation that reads the store works from one of these, so
+        the listing and the layout sidecar are read once per
+        operation."""
+        layout, children = self._read_meta()
+        df = self._store_reader(layout) if children else None
+        return _Snapshot(df, layout, children)
+
+    def _attrs(self, snap: _Snapshot) -> dict:
+        """The snapshot's ``_attrs.json`` sidecar (empty if none) —
+        opened only when the listing shows it."""
+        if "_attrs.json" not in snap.children:
+            return {}
+        return load_attrs(self.data_name, self.spark)
 
     def _store_reader(self, layout: dict | None) -> DataFrame:
         if layout is not None and layout.get("partition_by"):
@@ -424,31 +439,30 @@ class Harvester:
         # deliberately deleted (surfaced by the r13 scheme contract)
         fsutil.delete(self.spark, self.data_name + ".bak")
 
-    def _store_dims(self, dims=None) -> list[str]:
-        """Dim columns of the store: the runner's declared sweep args
-        plus any internal output dims present in the table."""
-        if dims is not None:
-            return list(dims)
-        df = self.load_full_df()
-        cols = set(df.columns) if df is not None else set()
-        # constants are passed but never dimensioned — only fn args
-        # that actually materialized as columns are dims
-        out = [a for a in self.runner.fn_args if a in cols]
-        for d in (self.runner.var_dims or {}).values():
-            for dd in d if isinstance(d, (list, tuple)) else [d]:
-                if dd in cols and dd not in out:
-                    out.append(dd)
-        return out
+    def _dense_source(self, dims) -> tuple[_Snapshot, list[str]]:
+        """The store snapshot and its dim columns: ``dims`` if given,
+        else the runner's declared sweep args plus any internal output
+        dims present in the table."""
+        snap = self._load_store()
+        if snap.df is None:
+            raise ValueError("no stored dataset")
+        if dims is None:
+            # constants are passed but never dimensioned — only fn args
+            # that actually materialized as columns are dims
+            cols = set(snap.df.columns)
+            dims = [
+                d for d in dict.fromkeys(self._result_dims(self.runner.fn_args))
+                if d in cols
+            ]
+        return snap, list(dims)
 
     def to_dense_pandas(self, dims=None):
         """Dense MultiIndex view of the full store (driver-sized;
         reference ``Harvester.full_ds`` analog)."""
         from .runner import to_dense_pandas
 
-        df = self.load_full_df()
-        if df is None:
-            raise ValueError("no stored dataset")
-        return to_dense_pandas(df, self._store_dims(dims))
+        snap, dims = self._dense_source(dims)
+        return to_dense_pandas(snap.df, dims)
 
     def to_xarray(self, dims=None, **kw):
         """Dense ``xr.Dataset`` of the full store — what an existing
@@ -461,28 +475,33 @@ class Harvester:
         (gen/combo_runner.py:514-535).  Pass ``attrs=`` to override."""
         from .runner import to_xarray
 
-        df = self.load_full_df()
-        if df is None:
-            raise ValueError("no stored dataset")
+        snap, dims = self._dense_source(dims)
         if "attrs" not in kw:
             # constants LAST — the reference applies constants on top
             # of attrs (gen/combo_runner.py:514-535: ds.attrs = attrs,
             # then ds.attrs[k] = constant) — and the same order keeps
             # this consistent with the sidecar add_df writes
             kw["attrs"] = {
-                **load_attrs(self.data_name, self.spark),
+                **self._attrs(snap),
                 **self.runner.attrs,
                 **self.runner.constants,
             }
-        return to_xarray(df, self._store_dims(dims), **kw)
+        return to_xarray(snap.df, dims, **kw)
 
     # -- merging ---------------------------------------------------------
     def add_df(
         self, new: DataFrame, dims, *, overwrite: bool | None = None,
-        sync: bool = True, _store=_UNSET,
+        sync: bool = True, _store: _Snapshot | None = None,
     ) -> DataFrame:
         """Merge a new result table into the store (reference
         ``add_ds``, ``farming.py:602-670``).
+
+        The merge and the publish work on ONE store snapshot: read
+        here, or passed as ``_store`` by ``harvest_combos``, which
+        reads it before the sweep kernel runs.  The library assumes a
+        single writer per store: a store created or changed by another
+        writer during the sweep is not seen, and the publish replaces
+        it (the old version stays in the ``.bak`` copy).
 
         With ``partition_by`` set and a store on disk, the merge and
         the publish touch ONLY the partitions whose ``partition_by``
@@ -496,14 +515,8 @@ class Harvester:
         if overwrite is None:
             overwrite = self.overwrite
         pby = self.partition_by
-        # _store is the internal (df, layout, children) pass-through
-        # from harvest_combos, which has already read the store
-        # metadata this top-up (r14, guide §5: one listStatus + one
-        # sidecar read per top-up, not one per helper)
-        if _store is _UNSET:
-            old, layout, children = self._load_store()
-        else:
-            old, layout, children = _store
+        snap = self._load_store() if _store is None else _store
+        old = snap.df
         persisted = None
         if pby is not None:
             # validations run for FIRST writes too: a NULL coordinate
@@ -556,43 +569,20 @@ class Harvester:
                         for t in touched
                     ),
                 )
-            if old is None:
-                merged = new
-            elif pby is not None:
-                old_touched = old.where(touched_cond)
-                merged = merge_datasets(
-                    old_touched, new, dims, overwrite=overwrite
-                )
-            else:
-                merged = merge_datasets(
-                    old, new, dims, overwrite=overwrite
-                )
-            # the children listing already says whether an attrs
-            # sidecar exists — read it only then (no probe, no
-            # exception round trip on first writes / attrs-less runs)
-            sidecar_attrs = {}
-            if "_attrs.json" in children:
-                sidecar_attrs = json.loads(
-                    fsutil.read_text(
-                        self.spark,
-                        fsutil.join(self.data_name, "_attrs.json"),
-                    )
-                )
-            attrs = {**sidecar_attrs, **self.runner.attrs,
+            merged = new if old is None else merge_datasets(
+                old if pby is None else old.where(touched_cond), new, dims,
+                overwrite=overwrite,
+            )
+            attrs = {**self._attrs(snap), **self.runner.attrs,
                      **self.runner.constants}
             if sync:
                 if pby is not None and old is not None:
                     out_layout = self._publish_partitions(
-                        merged, attrs, layout=layout
+                        merged, attrs, snap.layout
                     )
                 else:
-                    _publish_parquet(
+                    out_layout = _publish_parquet(
                         merged, self.data_name, attrs, partition_by=pby
-                    )
-                    out_layout = (
-                        None if pby is None else
-                        {"partition_by": list(pby),
-                         "schema": merged.schema.jsonValue()}
                     )
                 # the publish just wrote the store and its layout
                 # sidecar — rebuild the read view from the layout in
@@ -619,7 +609,7 @@ class Harvester:
                 persisted.unpersist()
 
     def _publish_partitions(
-        self, merged: DataFrame, attrs: dict, layout=_UNSET
+        self, merged: DataFrame, attrs: dict, layout: dict | None
     ) -> dict:
         """Incremental publish for the partitioned layout: a DYNAMIC
         partition overwrite replaces only the ``dim=value`` dirs
@@ -639,24 +629,20 @@ class Harvester:
         a sidecar column with no data yet reads as all-NULL, which is
         exactly the outer-merge hole semantics (review catch).
 
-        ``layout`` is the store's current layout sidecar when the
-        caller already read it this top-up (r14 round-trip dedup);
-        left unset, it is read here.  Returns the layout dict as
-        written, so the caller's post-publish read needs no fresh
-        sidecar round trip."""
+        ``layout`` is the store's current layout sidecar, from the
+        caller's store snapshot.  Returns the layout dict as written,
+        so the caller's post-publish read needs no fresh sidecar round
+        trip."""
         from pyspark.sql.types import StructType
 
-        if layout is _UNSET:
-            layout = _read_layout(self.spark, self.data_name)
         schema = merged.schema
         if layout is not None:
-            old_schema = StructType.fromJson(layout["schema"])
-            extra = [
-                f for f in old_schema.fields if f.name not in schema.names
-            ]
-            for f in extra:
-                schema = schema.add(f)
-        _write_layout(self.spark, self.data_name, self.partition_by, schema)
+            for f in StructType.fromJson(layout["schema"]).fields:
+                if f.name not in schema.names:
+                    schema = schema.add(f)
+        layout = _write_layout(
+            self.spark, self.data_name, self.partition_by, schema
+        )
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -669,10 +655,7 @@ class Harvester:
                 fsutil.join(self.data_name, "_attrs.json"),
                 json.dumps(attrs, default=repr),
             )
-        return {
-            "partition_by": list(self.partition_by),
-            "schema": schema.jsonValue(),
-        }
+        return layout
 
     def compact(self, min_files: int = 8) -> list[str]:
         """Per-partition compaction for the partitioned layout: a
@@ -698,7 +681,8 @@ class Harvester:
             )
         if min_files < 1:
             raise ValueError("compact: min_files must be >= 1")
-        if not fsutil.exists(self.spark, self.data_name):
+        layout, children = self._read_meta()
+        if not children:
             return []
         pby = self.partition_by
         # walk the nested dim1=v1/dim2=v2 tree to the leaf dirs (one
@@ -736,7 +720,6 @@ class Harvester:
         from pyspark.sql.types import StructType
 
         reader = self.spark.read.option("basePath", self.data_name)
-        layout = _read_layout(self.spark, self.data_name)
         if layout is not None:
             reader = reader.schema(StructType.fromJson(layout["schema"]))
         sub = reader.parquet(*flagged)
@@ -768,7 +751,8 @@ class Harvester:
         One full-store rewrite by definition — run it once to adopt
         the layout, then every later top-up is O(touched)."""
         pby = _normalize_partition_by(partition_by)
-        old, _, children = self._load_store()
+        snap = self._load_store()
+        old = snap.df
         if old is None:
             raise ValueError("no stored dataset to repartition")
         if pby is not None:
@@ -788,106 +772,78 @@ class Harvester:
                     "through the dim=value layout"
                 )
         # the publish stages a fresh dir and swaps it in whole, so a
-        # pre-migration _layout.json cannot survive a flattening.
-        # attrs come from the children listing already in hand — no
-        # probe round trip for a store that never wrote the sidecar
-        attrs = (
-            load_attrs(self.data_name, self.spark)
-            if "_attrs.json" in children else {}
-        )
+        # pre-migration _layout.json cannot survive a flattening
         _publish_parquet(
-            old, self.data_name, attrs, partition_by=pby,
+            old, self.data_name, self._attrs(snap), partition_by=pby,
         )
         self.partition_by = pby
 
-    def _missing_filter(self, cases_df: DataFrame, dims, old=_UNSET) -> DataFrame:
-        if old is _UNSET:
-            old = self.load_full_df()
-        if old is None:
-            return cases_df
-        present_dims = [d for d in dims if d in old.columns]
-        if len(present_dims) < len(dims):
+    def _missing_filter(self, cases_df: DataFrame, dims, old: DataFrame) -> DataFrame:
+        """``cases_df`` minus the points ``old`` already holds a
+        result for (the present-point rule of ``missing``)."""
+        lacking = [d for d in dims if d not in old.columns]
+        if lacking:
             # the downstream merge would fail with UNRESOLVED_COLUMN —
             # fail here with the actionable instruction instead
-            lacking = [d for d in dims if d not in old.columns]
             raise ValueError(
                 f"store {self.data_name!r} lacks dim column(s) {lacking}; "
                 "call expand_dims() to promote them before harvesting "
                 "over the new dim"
             )
-        # output variables only: internal var-dim coordinate columns
-        # and _error are never null, so counting them as variables
-        # would mark all-failed points as present forever
-        result_dims = set(self._result_dims(dims))
-        var_names = [
-            c for c in old.columns
-            if c not in result_dims and c != "_error"
-        ]
-        if var_names:
-            present = non_null_points(old, present_dims, var_names)
-        else:
-            present = old.select(*present_dims).distinct()
-        return cases_df.join(present, present_dims, "left_anti")
+        present = _present_points(
+            old, dims, internal_dims=self._result_dims(())
+        )
+        return cases_df.join(present, list(dims), "left_anti")
 
     def harvest_combos(
         self, combos, *, missing_only: bool = True, overwrite: bool | None = None,
         sync: bool = True, **kwargs,
     ) -> DataFrame:
         """Run a combo sweep (optionally only not-yet-computed points)
-        and merge into the store (reference ``farming.py:710-778``)."""
+        and merge into the store (reference ``farming.py:710-778``).
+
+        One path: build the requested grid, anti-join it against the
+        store (only when a store exists and ``missing_only``), evaluate,
+        merge.  ONE store snapshot, read before the sweep kernel runs,
+        serves the anti-join, the merge and the publish — the
+        single-writer assumption documented on :meth:`add_df`."""
+        from .grid import combo_grid
+
         combos = parse_combos(combos)
         dims = self.runner._dim_names(combos=combos)
-        # ONE store-metadata read serves the whole top-up: the
-        # missing-filter's anti-join, add_df's merge and the publish
-        # all receive this (df, layout, children) triple instead of
-        # re-reading the sidecars (r14, guide §5 driver round-trips)
-        store = self._load_store() if missing_only else (None, None, [])
-        old, layout = store[0], store[1]
-        if missing_only and old is not None:
-            from .grid import combo_grid
-
-            grid = combo_grid(self.spark, combos).drop(LOC_COL)
-            # persist: the missing set feeds three consumers (emptiness
-            # probe, the schema sample row, the evaluation job) — each
-            # would otherwise rescan the store for the anti-join
-            todo = self._missing_filter(grid, dims, old=old).persist()
-            # the missing set stays a DataFrame end to end — no driver
-            # materialization, so million-point top-ups are fine.
-            # ONE limit(1) probe serves both the emptiness check and
-            # run_grid_df's var-spec sample row (r14: these were two
-            # separate driver jobs over the anti-join per top-up)
-            try:
+        snap = self._load_store()
+        todo = combo_grid(self.spark, combos)
+        # without an anti-join the first combo point is known on the
+        # driver: it resolves the var specs with no Spark job
+        sample = {arg: values[0] for arg, values in combos}
+        anti_join = missing_only and snap.df is not None
+        if anti_join:
+            # persist: the missing set feeds the emptiness probe and
+            # the evaluation job, each of which would otherwise rescan
+            # the store for the anti-join.  It stays a DataFrame end to
+            # end — no driver materialization
+            todo = self._missing_filter(todo, dims, snap.df).persist()
+        try:
+            if anti_join:
+                # ONE limit(1) probe serves both the emptiness check
+                # and run_grid_df's var-spec sample point
                 first = todo.limit(1).collect()
                 if not first:
-                    self.last_merged = old
-                    return old
-                new = self.runner.run_grid_df(
-                    todo, sample_point=first[0].asDict(), **kwargs
-                )
-                return self.add_df(
-                    new, self._result_dims(dims), overwrite=overwrite,
-                    sync=sync, _store=store,
-                )
-            finally:
-                # with sync=True (default) add_df's publish is an
-                # action, so the cached missing set is fully consumed
-                # by the time we get here.  With sync=False the merge
-                # is returned lazy: the persist still served this
-                # call's own actions (emptiness probe, run_grid_df's
-                # schema sample), and we unpersist anyway — a later
-                # action on the lazy result recomputes the anti-join
-                # (cheap: one store scan) rather than holding cached
-                # partitions hostage for an unknowable lifetime
-                todo.unpersist()
-        new = self.runner.run_combos(combos, **kwargs)
-        if missing_only:
-            # the store was probed absent above (old is None after a
-            # .bak restore check) — skip add_df's re-probe
+                    self.last_merged = snap.df
+                    return snap.df
+                sample = first[0].asDict()
+            new = self.runner.run_grid_df(todo, sample_point=sample, **kwargs)
             return self.add_df(
                 new, self._result_dims(dims), overwrite=overwrite,
-                sync=sync, _store=store,
+                sync=sync, _store=snap,
             )
-        return self.add_df(new, self._result_dims(dims), overwrite=overwrite, sync=sync)
+        finally:
+            if anti_join:
+                # with sync=True the publish has consumed the cache;
+                # with sync=False a later action on the lazy merge
+                # recomputes the anti-join (one store scan) rather than
+                # holding cached partitions for an unknowable lifetime
+                todo.unpersist()
 
     def harvest_cases(
         self, cases, *, overwrite: bool | None = None, sync: bool = True, **kwargs
@@ -900,43 +856,36 @@ class Harvester:
 
     def _result_dims(self, dims) -> list[str]:
         # internal var dims become real key columns in explode mode
-        extra = []
-        if self.runner.explode and self.runner.var_dims:
-            for ds in dict(self.runner.var_dims).values():
-                for d in (ds,) if isinstance(ds, str) else ds:
-                    if d not in extra:
-                        extra.append(d)
-        return list(dims) + extra
+        var_dims = dict(self.runner.var_dims or {}) if self.runner.explode else {}
+        return list(dims) + list(_union_dims(
+            (ds,) if isinstance(ds, str) else ds for ds in var_dims.values()
+        ))
 
     # -- schema evolution ------------------------------------------------
     def expand_dims(self, name: str, value) -> None:
         """Promote a former constant to a real dimension with ``value``
         on all existing rows (reference ``farming.py:672-688``)."""
-        from pyspark.sql import functions as F
-
-        old = self.load_full_df()
-        if old is None:
+        snap = self._load_store()
+        if snap.df is None:
             raise ValueError("no stored dataset to expand")
         _publish_parquet(
-            old.withColumn(name, F.lit(value)), self.data_name,
-            load_attrs(self.data_name, self.spark), partition_by=self.partition_by,
+            snap.df.withColumn(name, F.lit(value)), self.data_name,
+            self._attrs(snap), partition_by=self.partition_by,
         )
 
     def drop_sel(self, **dim_values) -> None:
         """Delete rows at specific coordinate values (reference
         ``farming.py:690-708``)."""
-        from pyspark.sql import functions as F
-
-        old = self.load_full_df()
-        if old is None:
+        snap = self._load_store()
+        if snap.df is None:
             raise ValueError("no stored dataset")
-        df = old
+        df = snap.df
         for dim, vals in dim_values.items():
             if not isinstance(vals, (list, tuple)):
                 vals = [vals]
             df = df.where(~F.col(dim).isin(list(vals)))
         _publish_parquet(
-            df, self.data_name, load_attrs(self.data_name, self.spark),
+            df, self.data_name, self._attrs(snap),
             partition_by=self.partition_by,
         )
 

@@ -43,6 +43,7 @@ Semantics notes
 from __future__ import annotations
 
 import posixpath
+import re
 
 __all__ = [
     "hadoop_fs",
@@ -70,16 +71,20 @@ def jpath(spark, path: str):
     return spark._jvm.org.apache.hadoop.fs.Path(path)
 
 
+# RFC 3986 scheme, then an optional "//authority"
+_URI_PREFIX = re.compile(r"([A-Za-z][A-Za-z0-9+.-]*):(?://([^/]*))?")
+
+
 def _fs_cache_key(path: str) -> tuple[str, str]:
     """(scheme, authority) parsed PYTHON-side — no JVM round trip.
-    Scheme-less paths all resolve through the session's default
+    Every ``scheme:`` prefix gets its own slot, with or without an
+    authority (``hdfs:/x`` is not a default-filesystem path);
+    scheme-less paths all resolve through the session's default
     filesystem, so they share one cache slot."""
-    if "://" in path:
-        scheme, _, rest = path.partition("://")
-        return scheme, rest.split("/", 1)[0]
-    if path.startswith("file:"):
-        return "file", ""
-    return "", ""
+    m = _URI_PREFIX.match(path)
+    if m is None:
+        return "", ""
+    return m.group(1), m.group(2) or ""
 
 
 def hadoop_fs(spark, path: str):
@@ -239,6 +244,19 @@ def read_text(spark, path: str, encoding: str = "utf-8") -> str:
     return read_bytes(spark, path).decode(encoding)
 
 
+def _is_file_not_found(exc: Exception) -> bool:
+    """Whether a py4j error is a ``java.io.FileNotFoundException``, or
+    wraps one along its ``getCause()`` chain.  Matched on the Java
+    class name, never on message text: an unrelated IO failure whose
+    message mentions a missing file is still a failure."""
+    jexc = getattr(exc, "java_exception", None)
+    while jexc is not None:
+        if jexc.getClass().getName() == "java.io.FileNotFoundException":
+            return True
+        jexc = jexc.getCause()
+    return False
+
+
 def read_text_or_none(spark, path: str, encoding: str = "utf-8"):
     """``read_text`` that returns ``None`` for a missing file in ONE
     filesystem operation (r14): the sidecar-read idiom was
@@ -250,9 +268,7 @@ def read_text_or_none(spark, path: str, encoding: str = "utf-8"):
     try:
         stream = fs.open(p)
     except Exception as exc:  # py4j wraps java.io.FileNotFoundException
-        if "FileNotFoundException" in str(
-            getattr(exc, "java_exception", exc.__class__.__name__)
-        ) or "FileNotFoundException" in str(exc):
+        if _is_file_not_found(exc):
             return None
         raise
     try:

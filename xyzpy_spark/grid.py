@@ -74,6 +74,25 @@ def _attach_combo_columns(df: DataFrame, combos, idx_col) -> DataFrame:
     return df
 
 
+def _seeded_shuffle(
+    df: DataFrame,
+    shuffle: bool | int | None,
+    num_partitions: int | None = None,
+    loc_col: str = LOC_COL,
+) -> DataFrame:
+    """Redistribute points across ``num_partitions`` (default: the
+    session's parallelism) by a seeded hash of ``loc_col`` — load
+    balancing when cost correlates with grid position (reference
+    semantics: ``gen/combo_runner.py:220-224``; order is never lost
+    because ``loc_col`` is carried).  ``shuffle`` is ``False``/``None``
+    (no-op), ``True`` (seed 42) or an int seed."""
+    if shuffle is False or shuffle is None:
+        return df
+    seed = 42 if shuffle is True else int(shuffle)
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, F.xxhash64(F.col(loc_col), F.lit(seed)))
+
+
 def combo_grid(
     spark: SparkSession,
     combos,
@@ -88,10 +107,8 @@ def combo_grid(
     ``loc_col`` — the 0-based row-major linear index, the stable key
     every downstream op (result pairing, reap order, merges) joins on.
 
-    ``shuffle`` — seeded redistribution of points across partitions for
-    load balancing when cost correlates with grid position (reference
-    semantics: ``gen/combo_runner.py:220-224``; order is never lost
-    because ``loc_col`` is carried).
+    ``shuffle`` — seeded redistribution of points across partitions
+    (:func:`_seeded_shuffle`).
     """
     combos = parse_combos(combos)
     if not combos:
@@ -101,11 +118,7 @@ def combo_grid(
         num_partitions = max(1, min(n, spark.sparkContext.defaultParallelism))
     df = spark.range(0, n, 1, num_partitions).withColumnRenamed("id", loc_col)
     df = _attach_combo_columns(df, combos, loc_col)
-    if shuffle is not False and shuffle is not None:
-        seed = 42 if shuffle is True else int(shuffle)
-        df = df.repartition(
-            num_partitions, F.xxhash64(F.col(loc_col), F.lit(seed))
-        )
+    df = _seeded_shuffle(df, shuffle, num_partitions, loc_col)
     return df.select(loc_col, *[arg for arg, _ in combos])
 
 
@@ -172,11 +185,7 @@ def case_grid(
     df = df.join(F.broadcast(case_df), "__case_idx").drop(
         "__case_idx", "__combo_loc"
     )
-    if shuffle is not False and shuffle is not None:
-        seed = 42 if shuffle is True else int(shuffle)
-        df = df.repartition(
-            num_partitions, F.xxhash64(F.col(loc_col), F.lit(seed))
-        )
+    df = _seeded_shuffle(df, shuffle, num_partitions, loc_col)
     return df.select(
         loc_col, *case_cols, *[arg for arg, _ in combos]
     )

@@ -43,6 +43,27 @@ def non_null_points(df: DataFrame, dims, var_names) -> DataFrame:
     ).select(*dims).distinct()
 
 
+def _present_points(
+    df: DataFrame, dims, var_names=None, *, internal_dims=()
+) -> DataFrame:
+    """Distinct ``dims`` points of ``df`` that hold a result — the one
+    present-point rule of every top-up.  The output variables are
+    ``var_names`` (default: every column of ``df``) minus the dims,
+    the ``internal_dims`` and ``_error``: coordinate columns and the
+    error text are never null, so counting them would mark failed
+    points present forever.  A point is present iff any output is set
+    (non-null, and non-NaN for floats); with no outputs left, any
+    stored row counts as present."""
+    skip = {*dims, *internal_dims, "_error"}
+    outputs = [
+        v for v in (df.columns if var_names is None else var_names)
+        if v not in skip
+    ]
+    if not outputs:
+        return df.select(*dims).distinct()
+    return non_null_points(df, dims, outputs)
+
+
 def is_case_missing(df: DataFrame, setting: dict, var_names) -> bool:
     """True iff all output variables are null (or absent) at ``setting``.
 
@@ -103,7 +124,8 @@ def parse_into_cases(
 
     Reference: ``parse_into_cases`` (``gen/case_runner.py:304-344``) —
     the *incremental top-up* primitive.  Returns the missing parameter
-    points as a DataFrame (one row per case to run).
+    points as a DataFrame (one row per case to run).  Without
+    ``var_names`` any stored row counts as present.
     """
     combos = parse_combos(combos)
     cases = parse_cases(cases, fn_args)
@@ -111,11 +133,7 @@ def parse_into_cases(
     if df is None:
         return requested
     dims = requested.columns
-    if var_names:
-        present = non_null_points(df, dims, var_names)
-    else:
-        # no output variables declared: any stored row counts as present
-        present = df.select(*dims).distinct()
+    present = _present_points(df, dims, var_names or ())
     return requested.join(present, dims, "left_anti")
 
 

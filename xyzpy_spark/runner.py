@@ -107,6 +107,31 @@ def _first_point_kwargs(combos, cases) -> dict:
     return kwargs
 
 
+def _union_dims(per_var_dims) -> tuple[str, ...]:
+    """Internal dims of all variables, in first-seen order — the
+    long table's internal coordinate columns."""
+    return tuple(dict.fromkeys(d for dims in per_var_dims for d in dims))
+
+
+def _result_schema(
+    specs, coords, *, explode: bool, param_fields=(), on_error: str = "raise"
+) -> T.StructType:
+    """Schema of an evaluated grid: ``_loc``, the parameter columns,
+    then (long mode) the internal dims and scalar outputs or (wide
+    mode) the array-typed outputs, and ``_error`` under
+    ``on_error="keep"``."""
+    fields = [T.StructField(LOC_COL, T.LongType()), *param_fields]
+    if explode:
+        for d in _union_dims(s.dims for s in specs):
+            fields.append(T.StructField(d, spark_type_of_scalar(coords[d][0])))
+        fields += [T.StructField(s.name, s.scalar_type) for s in specs]
+    else:
+        fields += [T.StructField(s.name, s.column_type) for s in specs]
+    if on_error == "keep":
+        fields.append(T.StructField("_error", T.StringType()))
+    return T.StructType(fields)
+
+
 def resolve_var_specs(
     fn,
     combos,
@@ -193,7 +218,6 @@ def resolve_var_specs(
 def _make_mapper(
     fn,
     param_cols,
-    param_fields,
     specs,
     coords,
     constants,
@@ -208,20 +232,8 @@ def _make_mapper(
     the reference's per-point dispatch), but I/O is Arrow-batched and
     rows are emitted vectorized.
     """
-    union_dims: tuple[str, ...] = ()
-    if explode:
-        seen = []
-        for s in specs:
-            for d in s.dims:
-                if d not in seen:
-                    seen.append(d)
-        union_dims = tuple(seen)
+    union_dims = _union_dims(s.dims for s in specs) if explode else ()
     dim_coord_vals = {d: list(coords[d]) for d in union_dims}
-    n_inner = (
-        int(np.prod([len(dim_coord_vals[d]) for d in union_dims]))
-        if union_dims
-        else 1
-    )
     out_cols = [f.name for f in out_schema.fields]
     err_col = "_error" if on_error == "keep" else None
 
@@ -322,11 +334,7 @@ def _make_vectorized_mapper(
     through a precomputed flat index per var (handles vars that use a
     subset or permutation of the union dims)."""
     out_cols = [f.name for f in out_schema.fields]
-    union_dims: list[str] = []
-    for s in specs:
-        for d in s.dims:
-            if d not in union_dims:
-                union_dims.append(d)
+    union_dims = _union_dims(s.dims for s in specs)
 
     if union_dims:
         inner_positions = np.array(
@@ -439,29 +447,15 @@ def evaluate_grid(
     """Evaluate ``fn`` at every row of ``grid_df`` (one mapInPandas pass)."""
     constants = constants or {}
     resources = resources or {}
-    param_cols = [c for c in grid_df.columns if c != LOC_COL]
-    param_fields = {f.name: f.dataType for f in grid_df.schema.fields}
-
-    fields = [T.StructField(LOC_COL, T.LongType())]
-    fields += [T.StructField(c, param_fields[c]) for c in param_cols]
-    if explode:
-        union_dims: list[str] = []
-        for s in specs:
-            for d in s.dims:
-                if d not in union_dims:
-                    union_dims.append(d)
-        for d in union_dims:
-            fields.append(
-                T.StructField(d, spark_type_of_scalar(coords[d][0]))
-            )
-        for s in specs:
-            fields.append(T.StructField(s.name, s.scalar_type))
-    else:
-        for s in specs:
-            fields.append(T.StructField(s.name, s.column_type))
-    if on_error == "keep":
-        fields.append(T.StructField("_error", T.StringType()))
-    out_schema = T.StructType(fields)
+    param_fields = [
+        T.StructField(f.name, f.dataType)
+        for f in grid_df.schema.fields if f.name != LOC_COL
+    ]
+    param_cols = [f.name for f in param_fields]
+    out_schema = _result_schema(
+        specs, coords, explode=explode, param_fields=param_fields,
+        on_error=on_error,
+    )
 
     if vectorized:
         if not explode and any(s.dims for s in specs):
@@ -477,7 +471,6 @@ def evaluate_grid(
     mapper = _make_mapper(
         fn,
         param_cols,
-        param_fields,
         specs,
         coords,
         constants,
